@@ -168,12 +168,6 @@ object Vocabulary {
         (e, n, i + 1, f) }
   }
 
-  def filterRareLocal(spark: SparkSession,
-      vocab: Seq[(String, Long, Int, Double)],
-      minValid: CountOrProportion, totalObservations: Long): DataFrame =
-    vocabDfFromTuples(spark,
-      foldRareTuples(vocab, minValid, totalObservations))
-
   /** Vocabulary over ARRAY-valued observations (the reference's nested
     * ExpandableDfDict cells, vocabulary.py:114-123: lists inside cells are
     * flattened while counting, NaN/null skipped): explode then count —

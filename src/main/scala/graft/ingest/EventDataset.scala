@@ -28,9 +28,6 @@ final case class EventDataset(
     measurements: DataFrame,
     subjects: DataFrame) {
 
-  def cache(): EventDataset =
-    EventDataset(events.cache(), measurements.cache(), subjects.cache())
-
   /** Events with ordering columns attached: per-subject event index by
     * (timestamp, event_id). Replaces the reference's global `sort_events`
     * (event_stream_dataset.py:668-671) — a total sort is a pointless global

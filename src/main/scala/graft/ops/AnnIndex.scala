@@ -30,9 +30,11 @@ import org.apache.spark.sql.functions._
   * declared (e.g. the kNN's `(lvl, src)`) is a KEYED part — `load`
   * resolves batches by latest-batch-wins per key group, so a delta
   * batch carrying the full replacement rows for just the groups an
-  * [[Hnsw.insertKnnDelta]] / [[Hnsw.deleteKnnDelta]] touched updates
-  * the index at delta-sized write cost instead of re-paying the full
-  * kNN rewrite the incremental compute just saved. A row whose
+  * [[Hnsw.insertKnnDeltaIndexed]] / [[Hnsw.deleteKnnDeltaIndexed]]
+  * touched updates the index at delta-sized write cost instead of
+  * re-paying the full kNN rewrite the incremental compute just saved.
+  * An ANN store the maintenance loop grows is always seeded by
+  * [[Hnsw.saveIndex]] (knn, vectors, members, memdead). A row whose
   * NON-KEY columns are all null is a TOMBSTONE: it wins its group like
   * any latest-batch row and then drops, deleting the group (how a
   * deleted vector's (lvl, src) groups leave an append-only store).
@@ -85,18 +87,16 @@ object AnnIndex {
     * across all jobs, so overlap hides the small parts' per-job
     * latency without multiplying task threads. The measured r14
     * regression came from per-delta range clustering + per-batch
-    * manifest re-reads (both fixed in r15), not from this pool.
-    * `spark.graft.index.writeConcurrency` overrides the default 4
-    * (a cluster caller can raise it; 1 forces sequential). */
+    * manifest re-reads (both fixed in r15), not from this pool. */
   private def writeAll(spark: SparkSession,
       jobs: Seq[() => Unit]): Unit = {
-    val conc = writeConcurrency(spark, jobs.length)
-    if (conc <= 1 || jobs.lengthCompare(1) <= 0) jobs.foreach(_.apply())
+    if (jobs.lengthCompare(1) <= 0) jobs.foreach(_.apply())
     else {
       val sc = spark.sparkContext
       val group = "annindex-write-" +
         java.util.UUID.randomUUID().toString
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(math.min(jobs.length, 4))
       try {
         val futs = jobs.map { j =>
           pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -111,21 +111,17 @@ object AnnIndex {
         }
         futs.foreach(_.get()) // rethrows the first failure
       } catch {
-        case e: java.util.concurrent.ExecutionException =>
-          sc.cancelJobGroup(group) // stop siblings, not just threads
-          throw e.getCause
-        case e: InterruptedException =>
+        // ANY failure (a job's, an interrupt, a cancelled future)
+        // stops the siblings' Spark jobs, not just their threads
+        case e: Throwable =>
           sc.cancelJobGroup(group)
-          throw e
+          throw (e match {
+            case x: java.util.concurrent.ExecutionException
+                if x.getCause != null => x.getCause
+            case _ => e
+          })
       } finally pool.shutdownNow()
     }
-  }
-
-  private def writeConcurrency(spark: SparkSession, n: Int): Int = {
-    val conf = spark.conf
-      .get("spark.graft.index.writeConcurrency", "").trim
-    if (conf.nonEmpty) math.max(1, math.min(conf.toInt, n))
-    else math.min(n, 4)
   }
 
   private def writeManifest(dir: String,
@@ -243,7 +239,7 @@ object AnnIndex {
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/gen-$g"), true)
     }
     if (curGen >= 1 && manifestCommitted(fs, root)) {
-      readManifest(spark, root).foreach { case (n, _, _) =>
+      readManifest(spark, root)._2.foreach { case (n, _, _) =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$root/$n"), true)
       }
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/_params"), true)
@@ -255,15 +251,16 @@ object AnnIndex {
     }
   }
 
+  /** The highest committed manifest under `path`: (version, rows). */
   private def readManifest(spark: SparkSession, path: String)
-      : Seq[(String, Int, String)] = {
+      : (Int, Seq[(String, Int, String)]) = {
     val (fs, _) = hadoopFs(spark, path)
     // highest committed version wins (v0 = the legacy `_manifest`);
     // fall back to the plain path so a genuinely-missing manifest
     // still fails with the familiar parquet error
-    val dir = committedManifests(fs, path).sortBy(-_._1).headOption
-      .map(_._2).getOrElse(s"$path/_manifest")
-    spark.read.parquet(dir)
+    val (version, dir) = committedManifests(fs, path).sortBy(-_._1)
+      .headOption.getOrElse(0 -> s"$path/_manifest")
+    version -> spark.read.parquet(dir)
       .select("part", "batches", "key_cols")
       .collect()
       .map { r =>
@@ -332,17 +329,31 @@ object AnnIndex {
     ()
   }
 
-  /** [[append]] against an OPEN handle: skips the per-call generation
-    * resolve, manifest scan and per-part schema footer re-reads (the
-    * handle already carries all three), and returns the successor
-    * handle so a maintenance loop chains delete → insert → compact
-    * probes off ONE store snapshot per micro-batch. */
+  /** [[append]] against an OPEN handle: skips the manifest scan and
+    * per-part schema footer re-reads, and returns the successor handle
+    * so a maintenance loop chains delete → insert → compact probes off
+    * ONE store snapshot per micro-batch. A STALE handle (another append
+    * or a fold committed since it was opened) throws an
+    * IllegalStateException before any part write: its batch numbers
+    * would overwrite committed batches or land in a retired generation.
+    * The check is two filesystem listings, no Spark job; the store
+    * still takes one writer at a time. */
   def appendTo(store: Store, deltaParts: Map[String, DataFrame])
       : Store = {
     require(deltaParts.nonEmpty, "AnnIndex.append: no delta parts")
     val spark = store.spark
     val path = store.path
     val manifest = store.manifest
+    val (fs, _) = hadoopFs(spark, path)
+    val livePath = resolveGen(spark, store.root)
+    val versions = committedManifests(fs, livePath).map(_._1)
+    val liveVersion = if (versions.isEmpty) 0 else versions.max
+    if (livePath != path || liveVersion != store.version)
+      throw new IllegalStateException(
+        s"AnnIndex.appendTo: stale handle on ${store.root} — the " +
+          s"handle is at $path manifest v${store.version}, the store " +
+          s"is at $livePath manifest v$liveVersion; re-open the index " +
+          "and recompute the delta")
     val byName = manifest.map(e => e._1 -> e).toMap
     deltaParts.foreach { case (n, df) =>
       requireValidName(n)
@@ -370,18 +381,16 @@ object AnnIndex {
     // never a mid-rewrite hole (the generational discipline, applied
     // to the manifest itself; the prior version stays one cycle for
     // in-flight readers)
-    val (fs, _) = hadoopFs(spark, path)
-    val versions = committedManifests(fs, path).map(_._1)
-    val cur = if (versions.isEmpty) 0 else versions.max
     val bumped = manifest.map { case (n, b, ks) =>
       (n, if (deltaParts.contains(n)) b + 1 else b, ks)
     }
-    writeManifest(s"$path/_manifest-v${cur + 1}", bumped, spark)
-    versions.filter(_ < cur).foreach { v =>
+    val next = store.version + 1
+    writeManifest(s"$path/_manifest-v$next", bumped, spark)
+    versions.filter(_ < store.version).foreach { v =>
       val d = if (v == 0) s"$path/_manifest" else s"$path/_manifest-v$v"
       fs.delete(new org.apache.hadoop.fs.Path(d), true)
     }
-    new Store(spark, path, bumped)
+    new Store(spark, store.root, path, next, bumped)
   }
 
   /** Batch-resolved part relations for a manifest already in hand:
@@ -417,11 +426,14 @@ object AnnIndex {
     * load / partBatches / maxBatches / append call in the batch
     * (3–4 manifest jobs and per-part schema footer re-reads per
     * micro-batch at sf0.1 — pure per-batch fixed cost, guide §1.2).
-    * Handles are snapshots: [[appendTo]] returns the successor handle;
+    * Handles are snapshots of (`root`, resolved generation `path`,
+    * manifest `version`): [[appendTo]] returns the successor handle;
     * a stale handle keeps reading its own committed state (the same
-    * guarantee concurrent readers already have). */
+    * guarantee concurrent readers already have) but [[appendTo]]
+    * refuses it. */
   final class Store private[AnnIndex] (val spark: SparkSession,
-      val path: String, val manifest: Seq[(String, Int, String)]) {
+      val root: String, val path: String, val version: Int,
+      val manifest: Seq[(String, Int, String)]) {
     /** Batch-resolved part relations (see [[load]]). */
     lazy val parts: Map[String, DataFrame] =
       partsFrom(spark, path, manifest)
@@ -446,7 +458,8 @@ object AnnIndex {
     * read backing every accessor on the returned handle. */
   def open(spark: SparkSession, root: String): Store = {
     val path = resolveGen(spark, root)
-    new Store(spark, path, readManifest(spark, path))
+    val (version, manifest) = readManifest(spark, path)
+    new Store(spark, root, path, version, manifest)
   }
 
   /** Read the index back: batches resolved per the manifest — plain

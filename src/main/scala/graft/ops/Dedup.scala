@@ -86,21 +86,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_contents"), sum("nch").as("n_chars"))
   }
 
-  /** MinHash signature as an array column: k independent permutations
-    * approximated by k seeded xxhash64 draws, min per shingle set. Pure
-    * higher-order functions — one pass over the shingle array per hash.
-    *
-    * NOTE: Spark evaluates higher-order-function lambdas interpreted, per
-    * element — k×|shingles| lambda calls per doc. Fine for small arrays;
-    * for corpus-scale signatures use `minhashSignatures` below, which is
-    * whole-stage-codegen end to end.
-    */
-  def minhashSignature(shingles: Column, k: Int = 128): Column =
-    transform(sequence(lit(0), lit(k - 1)), seed =>
-      when(size(shingles) === 0, lit(Long.MaxValue))
-        .otherwise(array_min(transform(shingles,
-          s => xxhash64(s, seed)))))
-
   /** Deterministic plan-time permutation-seed constants — shared
     * definition (graft.core.Hashing) with MinHashSigExpr, which must stay
     * bit-compatible. */

@@ -253,63 +253,26 @@ object Hnsw {
   def insertKnn(oldKnn: DataFrame, oldVecs: DataFrame,
       newVecs: DataFrame, idCol: String, vecCol: String, seed: Long,
       maxLevel: Int, m: Int, bands: Int,
-      bucketFn: (Int, Int, Column) => Column): DataFrame =
-    topMEdges(
-      oldKnn.select("lvl", "src", "dst", "c")
-        .unionByName(freshTopM(oldKnn, oldVecs, newVecs, idCol, vecCol,
-          seed, maxLevel, m, bands, bucketFn)),
-      m)
-
-  /** The bounded fresh-candidate top-M both insert forms merge from:
-    * every banded-bucket pair with a NEW endpoint, in both src roles
-    * (src ∈ A∪B gains dst ∈ B candidates; src ∈ B also scans dst ∈ A).
-    * `newVecs` rows whose id already exists in `oldVecs` are DROPPED
-    * up front (one id-only anti-join, no extra job): the
-    * insert ≡ rebuild identity assumes disjoint arrivals, and an
-    * overlapping id would otherwise plant duplicate membership rows
-    * and leave stale stored edges to the old copy — re-arrivals are
-    * treated as already-present, never as silent corruption; updates
-    * are [[deleteKnn]] then insert. */
-  private def freshTopM(oldKnn: DataFrame, oldVecs: DataFrame,
-      newVecs: DataFrame, idCol: String, vecCol: String, seed: Long,
-      maxLevel: Int, m: Int, bands: Int,
       bucketFn: (Int, Int, Column) => Column): DataFrame = {
+    // the bounded fresh candidates: every banded-bucket pair with a NEW
+    // endpoint, in both src roles (src ∈ A∪B gains dst ∈ B candidates;
+    // src ∈ B also scans dst ∈ A). `newVecs` rows whose id already
+    // exists in `oldVecs` are DROPPED up front (one id-only anti-join,
+    // no extra job): the insert ≡ rebuild identity assumes disjoint
+    // arrivals, and an overlapping id would otherwise plant duplicate
+    // membership rows and leave stale stored edges to the old copy —
+    // re-arrivals are treated as already-present, never as silent
+    // corruption; updates are [[deleteKnn]] then insert.
     val onlyNew = newVecs.join(oldVecs.select(idCol), Seq(idCol),
       "left_anti")
     val memA = bandedMembers(oldVecs, idCol, vecCol, seed, maxLevel,
       bands, bucketFn)
     val memB = bandedMembers(onlyNew, idCol, vecCol, seed, maxLevel,
       bands, bucketFn)
-    val freshPairs = pairsOf(memA.unionByName(memB), memB)
-      .unionByName(pairsOf(memB, memA))
-    topMPerSrc(freshPairs, m)
-  }
-
-  /** DELTA form of [[insertKnn]] for [[AnnIndex.append]]: only the
-    * (lvl, src) groups whose top-M ACTUALLY CHANGES are returned, each
-    * as its FULL replacement top-M (old stored edges of the group
-    * merged with the fresh candidates and re-ranked — the same
-    * topM(P∪Q) identity as insertKnn, scoped to touched groups — then
-    * diffed against the stored rows by [[changedGroups]]: a group that
-    * merely GAINED a candidate but kept its exact top-M stays out of
-    * the delta, which is what keeps moderate batches from saturating
-    * the "delta" into a full index rewrite — most gained candidates
-    * lose to every stored edge). Latest-batch-wins resolution over key
-    * (lvl, src) then yields exactly insertKnn's relation: unchanged
-    * groups keep their stored rows, changed groups take the delta — so
-    * `load(save(knn(A)) + append(insertKnnDelta(..B..)))` ≡
-    * `buildKnn(A ∪ B)` at DELTA-sized write cost (the storage half of
-    * incremental insert; PersistenceSpec pins the identity). */
-  def insertKnnDelta(oldKnn: DataFrame, oldVecs: DataFrame,
-      newVecs: DataFrame, idCol: String, vecCol: String, seed: Long,
-      maxLevel: Int, m: Int, bands: Int,
-      bucketFn: (Int, Int, Column) => Column): DataFrame = {
-    val fresh = freshTopM(oldKnn, oldVecs, newVecs, idCol, vecCol,
-      seed, maxLevel, m, bands, bucketFn)
-    val touched = fresh.select("lvl", "src").distinct()
-    val stored = oldKnn.select("lvl", "src", "dst", "c")
-      .join(touched, Seq("lvl", "src"), "left_semi")
-    changedGroups(topMEdges(stored.unionByName(fresh), m), stored)
+    val fresh = topMPerSrc(pairsOf(memA.unionByName(memB), memB)
+      .unionByName(pairsOf(memB, memA)), m)
+    topMEdges(oldKnn.select("lvl", "src", "dst", "c").unionByName(fresh),
+      m)
   }
 
   /** Only the (lvl, src) groups whose replacement rows differ from the
@@ -442,11 +405,10 @@ object Hnsw {
 
   /** Seed a maintenance-ready persisted index: the kNN (keyed), the
     * corpus vectors (keyed — CDC tombstones need it), the banded
-    * membership part and an empty deletion ledger. This is the save
-    * [[graft.streaming.StreamOps.annIndexMaintenanceStream]] grows
-    * from with batch-sized per-micro-batch COMPUTE (a store seeded
-    * without the membership parts still works — the stream falls back
-    * to corpus-rescan probes). */
+    * membership part and an empty deletion ledger. This is the ONE
+    * layout [[graft.streaming.StreamOps.annIndexMaintenanceStream]]
+    * maintains, with batch-sized per-micro-batch COMPUTE; the loop
+    * refuses a store without the `members`/`memdead` parts. */
   def saveIndex(path: String, vecs: DataFrame, idCol: String,
       vecCol: String, seed: Long, maxLevel: Int, m: Int, bands: Int,
       bucketFn: (Int, Int, Column) => Column,
@@ -479,10 +441,10 @@ object Hnsw {
   /** Members-aware physical fold for [[AnnIndex.compactToNextGen]]:
     * keyed parts resolve as usual, dead member rows drop, `mb` resets
     * to 0 and the ledger empties — REQUIRED instead of the generic
-    * [[AnnIndex.compact]] whenever a members part exists, because a
-    * generic fold would preserve old `mb` stamps while the batch
-    * counter restarts, letting a post-fold delete threshold undercut
-    * pre-fold rows (they would survive their own deletion). */
+    * [[AnnIndex.compact]] for a [[saveIndex]] store, because a generic
+    * fold would preserve old `mb` stamps while the batch counter
+    * restarts, letting a post-fold delete threshold undercut pre-fold
+    * rows (they would survive their own deletion). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       src: String, dst: String): Unit = {
     val (parts, params) = AnnIndex.load(spark, src)
@@ -514,18 +476,6 @@ object Hnsw {
   private def sortedByKey(df: DataFrame, key: String): DataFrame =
     df.repartitionByRange(col(key)).sortWithinPartitions(key)
 
-  /** [[insertKnnDelta]] answered from the PERSISTED membership part:
-    * per-batch compute is one cell-pruned scan of stored membership
-    * (the batch's own banded cells, inlined as an `IN` predicate the
-    * parquet scan prunes row groups by) joined against the batch —
-    * O(|B| · bucketPop · bands · levels) candidate cosines and
-    * blast-radius-sized scans, NEVER a corpus re-hash. Exact: members
-    * outside the batch's cells cannot pair with it, so the pruned
-    * relation feeds [[insertKnn]]'s own fresh-pair algebra unchanged.
-    * Returns (knn delta, member delta) — the two parts the caller
-    * appends together, `mb`-stamped with the members part's current
-    * batch count. Caller guarantees `newVecs` ids are not live in the
-    * index (the stream's pruned overlap anti-join). */
   /** The cell-pruned live-membership probe [[insertKnnDeltaIndexed]]
     * scans — public so the plan-shape ratchet can pin that the cell
     * predicate reaches the members part's parquet scan as
@@ -535,6 +485,21 @@ object Hnsw {
       batchMembers: DataFrame): DataFrame =
     pruneBy(liveMembers(members, memdead), "cell", batchMembers, "cell")
 
+  /** DELTA form of [[insertKnn]] for [[AnnIndex.append]]: only the
+    * (lvl, src) groups whose top-M ACTUALLY CHANGES, each as its FULL
+    * replacement top-M (a group that gained a candidate but kept its
+    * top-M stays out — [[changedGroups]]), so latest-batch-wins over
+    * (lvl, src) yields exactly insertKnn's relation:
+    * `load(saveIndex(A) + append(delta(B)))` ≡ `buildKnn(A ∪ B)`.
+    * Per-batch compute is one cell-pruned scan of the PERSISTED
+    * membership (the batch's own banded cells, inlined as an `IN`
+    * predicate the parquet scan prunes row groups by) joined against
+    * the batch — O(|B| · bucketPop · bands · levels) candidate
+    * cosines, NEVER a corpus re-hash; exact, since members outside
+    * the batch's cells cannot pair with it. Returns (knn delta, member
+    * delta), `mb`-stamped with the members part's current batch
+    * count. Caller guarantees `newVecs` ids are not live in the index
+    * (the stream's pruned overlap anti-join). */
   def insertKnnDeltaIndexed(oldKnn: DataFrame, members: DataFrame,
       memdead: DataFrame, newVecs: DataFrame, idCol: String,
       vecCol: String, seed: Long, maxLevel: Int, m: Int, bands: Int,
@@ -560,8 +525,12 @@ object Hnsw {
     (delta, memB)
   }
 
-  /** [[deleteKnnDelta]] answered from the PERSISTED membership part —
-    * note it needs NO vectors, seed or bucket family: the deleted ids'
+  /** DELTA form of [[deleteKnn]] for [[AnnIndex.append]]: replacement
+    * rows for every (lvl, src) group the delete can change, plus
+    * all-null TOMBSTONES so vanishing groups leave on load (a group
+    * with both resolves to its replacement rows). Answered from the
+    * PERSISTED membership part — it needs NO vectors, seed or bucket
+    * family: the deleted ids'
     * stored member rows already carry their cells, affected groups are
     * found by pruning the stored kNN to vids sharing those cells (a
     * KEY-column predicate that commutes below the keyed-resolve
@@ -660,46 +629,6 @@ object Hnsw {
     val recomputed = topMPerSrc(pairsOf(memAff, memAll), m)
     cleaned
       .join(affected, Seq("lvl", "src"), "left_anti")
-      .unionByName(recomputed)
-  }
-
-  /** DELTA form of [[deleteKnn]] for [[AnnIndex.append]]: replacement
-    * rows for every (lvl, src) group the delete can change, plus
-    * TOMBSTONES (all-null non-key rows — [[AnnIndex]]'s deletion
-    * convention for an append-only store) so groups that vanish
-    * entirely (src ∈ D, or an affected group whose recompute comes
-    * back empty) actually leave on load. Tombstoned groups that also
-    * get replacement rows in the same batch resolve correctly: the
-    * whole latest batch wins the group, then the tombstone row itself
-    * drops. `load(save(knn(A)) + append(deleteKnnDelta(..D..)))` ≡
-    * `buildKnn(A ∖ D)` at blast-radius-sized write cost
-    * (PersistenceSpec pins the identity, composed after an insert
-    * append). */
-  def deleteKnnDelta(oldKnn: DataFrame, oldVecs: DataFrame,
-      deleteIds: DataFrame, idCol: String, vecCol: String, seed: Long,
-      maxLevel: Int, m: Int, bands: Int,
-      bucketFn: (Int, Int, Column) => Column): DataFrame = {
-    val del = deleteIds.select(col(idCol).cast("long").as("__did"))
-      .distinct()
-    val keptVecs = oldVecs.join(
-      del.select(col("__did").as(idCol)), Seq(idCol), "left_anti")
-    val affected = oldKnn
-      .join(del.select(col("__did").as("dst")), Seq("dst"))
-      .select("lvl", "src").distinct()
-      .join(del.select(col("__did").as("src")), Seq("src"), "left_anti")
-    val gone = oldKnn
-      .join(del.select(col("__did").as("src")), Seq("src"))
-      .select("lvl", "src").distinct()
-    val memAll = bandedMembers(keptVecs, idCol, vecCol, seed, maxLevel,
-      bands, bucketFn)
-    val memAff = memAll.join(
-      affected.select(col("lvl"), col("src").as("vid")),
-      Seq("lvl", "vid"))
-    val recomputed = topMPerSrc(pairsOf(memAff, memAll), m)
-    affected.unionByName(gone)
-      .select(col("lvl"), col("src"),
-        lit(null).cast("long").as("dst"),
-        lit(null).cast("double").as("c"))
       .unionByName(recomputed)
   }
 

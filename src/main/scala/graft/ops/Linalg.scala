@@ -482,16 +482,6 @@ object Linalg {
     (n.toLong, beta)
   }
 
-  /** Ridge coefficients as an EAV relation `(j, beta)`, 6-dp. */
-  def ridgeFitEav(spark: SparkSession, df: DataFrame, vecCol: String,
-      yCol: String, lambda: Double, eta: Double, iters: Int): DataFrame = {
-    val (_, beta) = ridgeFit(df, vecCol, yCol, lambda, eta, iters)
-    import spark.implicits._
-    beta.zipWithIndex
-      .map { case (v, j) => (j.toLong, math.rint(v * 1e6) / 1e6) }
-      .toSeq.toDF("j", "beta")
-  }
-
   /** Score the corpus with a fitted ridge probe: fit (one pass), round
     * β to 9 dp, then a broadcast-literal dot product per row — the
     * quality-classifier filter stage. `(idCol, score, keep)`. `keep`

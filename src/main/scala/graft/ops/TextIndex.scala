@@ -43,6 +43,16 @@ import org.apache.spark.sql.functions._
 object TextIndex {
   private val Kind = "bm25"
 
+  /** The store layout every entry point requires: kind = bm25 and a
+    * `pending` part, exactly what [[save]] and [[compact]] write. */
+  private def requireLayout(op: String, store: AnnIndex.Store): Unit =
+    require(store.params.get("kind").contains(Kind) &&
+        store.manifest.exists(_._1 == "pending"),
+      s"TextIndex.$op: index at ${store.path} is not a $Kind store " +
+        s"with a pending part (kind ${store.params.getOrElse("kind", "?")}" +
+        s", parts [${store.manifest.map(_._1).sorted.mkString(", ")}])" +
+        " — seed it with TextIndex.save")
+
   /** Range-cluster a part on its probe key before writing — the same
     * discipline as [[Hnsw]]'s `sortedByKey`: `postings` clustered on
     * `term` makes a query's pushed term-IN prune at the row-group
@@ -161,20 +171,15 @@ object TextIndex {
   def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
     val store = AnnIndex.open(spark, path)
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.delete: index at $path has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
+    requireLayout("delete", store)
     val dels = ids.select(col(idCol)).distinct().localCheckpoint(true)
     // a delete must also retract any PENDING text for the id — a
     // keyed tombstone (null text) in the same append, so a staged
     // update that is later deleted can never resurrect at the fold;
     // ids with no pending entry resolve to a lone tombstone and drop
-    val pendingTomb =
-      if (!store.manifest.exists(_._1 == "pending"))
-        Map.empty[String, DataFrame]
-      else Map("pending" -> dels.select(col(idCol),
-        lit(null).cast("string").as(store.params("text_col"))))
-    AnnIndex.appendTo(store, Map("deleted" -> dels) ++ pendingTomb)
+    AnnIndex.appendTo(store, Map("deleted" -> dels,
+      "pending" -> dels.select(col(idCol),
+        lit(null).cast("string").as(store.params("text_col")))))
     ()
   }
 
@@ -221,12 +226,7 @@ object TextIndex {
   def stageUpdates(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String): Unit = {
     val store = AnnIndex.open(spark, path)
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.stageUpdates: index at $path has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
-    require(store.manifest.exists(_._1 == "pending"),
-      s"TextIndex.stageUpdates: index at $path has no pending part " +
-        "(a legacy store) — compact it once to upgrade the layout")
+    requireLayout("stageUpdates", store)
     val staged = docs.select(col(idCol), col(textCol))
       .dropDuplicates(idCol, textCol).localCheckpoint(true)
     val ids = idsWithConflictGuard(staged, idCol, cs =>
@@ -274,13 +274,7 @@ object TextIndex {
   def applyCdc(store: AnnIndex.Store, dels: DataFrame,
       staged: DataFrame, appends: DataFrame, idCol: String,
       textCol: String): (Long, AnnIndex.Store) = {
-    val path = store.path
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.applyCdc: index at $path has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
-    require(store.manifest.exists(_._1 == "pending"),
-      s"TextIndex.applyCdc: index at $path has no pending part " +
-        "(a legacy store) — compact it once to upgrade the layout")
+    requireLayout("applyCdc", store)
     val delIds = dels.select(col(idCol)).distinct().localCheckpoint(true)
     // stageUpdates' guard, unchanged: one text per id or fail loudly
     val stg = staged.select(col(idCol), col(textCol))
@@ -344,18 +338,17 @@ object TextIndex {
     * over index rows), stats re-derive from the merged doc list, and
     * the deleted/pending parts empty — freeing those ids for
     * re-insertion. After this, search's df/N are exact again
-    * (equality with save(survivors ∪ updates) is spec-pinned). A
-    * legacy (pre-pending) store folds fine and comes out UPGRADED
-    * with an empty pending part. `dst` must differ from `src`, as in
-    * [[AnnIndex.compact]]. */
+    * (equality with save(survivors ∪ updates) is spec-pinned). The
+    * source must have [[save]]'s layout (kind bm25 with a pending
+    * part); `dst` must differ from `src`, as in [[AnnIndex.compact]]. */
   def compact(spark: SparkSession, srcPath: String, dstPath: String)
       : Unit = {
     require(srcPath != dstPath,
       "TextIndex.compact: dstPath must differ from srcPath")
-    val (parts, params) = AnnIndex.load(spark, srcPath)
-    require(params.get("kind").contains(Kind),
-      s"TextIndex.compact: index at $srcPath has kind " +
-        s"${params.getOrElse("kind", "?")}, expected $Kind")
+    val store = AnnIndex.open(spark, srcPath)
+    requireLayout("compact", store)
+    val parts = store.parts
+    val params = store.params
     val idCol = params("id_col")
     val textCol = params("text_col")
     // no-op fast paths: the deleted and pending parts hold only the
@@ -370,8 +363,9 @@ object TextIndex {
     val dead = if (parts("deleted").isEmpty) None
       else Some(parts("deleted").select(col(idCol)).distinct()
         .localCheckpoint(true))
-    val pend = parts.get("pending").filter(p => !p.isEmpty)
-      .map(_.select(col(idCol), col(textCol)).localCheckpoint(true))
+    val pend = if (parts("pending").isEmpty) None
+      else Some(parts("pending").select(col(idCol), col(textCol))
+        .localCheckpoint(true))
     // pending ids are on the dead list by construction (an update is
     // delete + stage), so survivors never overlap the pending docs
     val pendDelta = pend.map(p => deltaParts(p, idCol, textCol))
@@ -436,9 +430,7 @@ object TextIndex {
     * micro-batch, successor handle returned for the compaction probe. */
   def append(store: AnnIndex.Store, docs: DataFrame,
       idCol: String, textCol: String): (Long, AnnIndex.Store) = {
-    require(store.params.get("kind").contains(Kind),
-      s"TextIndex.append: index at ${store.path} has kind " +
-        s"${store.params.getOrElse("kind", "?")}, expected $Kind")
+    requireLayout("append", store)
     val arriving = docs.select(col(idCol), col(textCol))
       .dropDuplicates(idCol, textCol)
       .localCheckpoint(true)
@@ -478,10 +470,10 @@ object TextIndex {
     val qt = query.trim.toLowerCase.split("\\s+")
       .filter(_.nonEmpty).distinct.toSeq
     require(qt.nonEmpty, "TextIndex.search needs a non-empty query")
-    val (parts, params) = AnnIndex.load(spark, path)
-    require(params.get("kind").contains(Kind),
-      s"TextIndex.search: index at $path has kind " +
-        s"${params.getOrElse("kind", "?")}, expected $Kind")
+    val store = AnnIndex.open(spark, path)
+    requireLayout("search", store)
+    val parts = store.parts
+    val params = store.params
     val idCol = params("id_col")
     // the emptiness probe is one job over the updates-since-last-
     // compact relation (broadcast-sized); when pending is empty —
@@ -492,8 +484,9 @@ object TextIndex {
     // materialization jobs per search and pin executor storage blocks
     // between folds (write paths keep the pin; they materialize
     // every part anyway)
-    val pendDelta = parts.get("pending").filter(p => !p.isEmpty)
-      .map(p => deltaParts(p, idCol, params("text_col"), pin = false))
+    val pendDelta = if (parts("pending").isEmpty) None
+      else Some(deltaParts(parts("pending"), idCol, params("text_col"),
+        pin = false))
     // batches-sized and |terms|-sized rollups — broadcast into the
     // posting scan so the only wide stage is the per-doc score agg
     val stats = pendDelta.fold(parts("stats"))(d =>

@@ -823,15 +823,6 @@ object TextOps {
         col("__b.score").as("score"))
   }
 
-  /** Word n-gram shingles. */
-  def wordShingles(text: Column, n: Int = 3): Column = {
-    val toks = tokens(lower(text))
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n))))))
-  }
-
   /** Train-vs-benchmark decontamination: training docs sharing any
     * case-folded word n-gram with an evaluation corpus (the n-gram
     * overlap check every serious pretraining pipeline runs before

@@ -118,17 +118,17 @@ class PersistenceSpec extends SparkSpec {
     def knnSet(df: org.apache.spark.sql.DataFrame) =
       df.select("lvl", "src", "dst", "c").collect()
         .map(_.toSeq).toSet
-    val knnA = Hnsw.buildKnn(vecsA, "id", "v", 9, 2, 6, 2, bf)
     val dir = Files.createTempDirectory("graft-ann-append").toString +
       "/idx"
-    AnnIndex.save(dir, Map("knn" -> knnA),
-      Map("seed" -> "9", "kind" -> "hnsw"),
-      keys = Map("knn" -> Seq("lvl", "src")))
+    Hnsw.saveIndex(dir, vecsA, "id", "v", 9, 2, 6, 2, bf)
 
     // insert delta: only touched (lvl, src) groups cross the wire
-    val insDelta = Hnsw.insertKnnDelta(knnA, vecsA, vecsB, "id", "v",
-      9, 2, 6, 2, bf)
-    AnnIndex.append(dir, Map("knn" -> insDelta))
+    val s0 = AnnIndex.open(spark, dir)
+    val (insDelta, memDelta) = Hnsw.insertKnnDeltaIndexed(
+      s0.parts("knn"), s0.parts("members"), s0.parts("memdead"), vecsB,
+      "id", "v", 9, 2, 6, 2, bf, mb = s0.partBatches("members"))
+    val s1 = AnnIndex.appendTo(s0, Map("knn" -> insDelta,
+      "vectors" -> vecsB, "members" -> memDelta))
     val (p1, _) = AnnIndex.load(spark, dir)
     val wantAB = knnSet(Hnsw.buildKnn(vecsAB, "id", "v", 9, 2, 6, 2, bf))
     assert(knnSet(p1("knn")) == wantAB)
@@ -137,10 +137,14 @@ class PersistenceSpec extends SparkSpec {
 
     // delete delta on top of the appended state (composition)
     val delIds = (0 until 280 by 7).map(_.toLong).toDF("id")
-    val knnAB = Hnsw.buildKnn(vecsAB, "id", "v", 9, 2, 6, 2, bf)
-    val delDelta = Hnsw.deleteKnnDelta(knnAB, vecsAB, delIds, "id",
-      "v", 9, 2, 6, 2, bf)
-    AnnIndex.append(dir, Map("knn" -> delDelta))
+    val (delDelta, dead) = Hnsw.deleteKnnDeltaIndexed(s1.parts("knn"),
+      s1.parts("members"), s1.parts("memdead"), delIds, "id", m = 6,
+      th = s1.partBatches("members"))
+    val vecType = s1.parts("vectors").schema("v").dataType
+    AnnIndex.appendTo(s1, Map("knn" -> delDelta,
+      "vectors" -> delIds.select(col("id"),
+        org.apache.spark.sql.functions.lit(null).cast(vecType).as("v")),
+      "memdead" -> dead))
     val (p2, _) = AnnIndex.load(spark, dir)
     val vecsKept = vecsAB.join(delIds, Seq("id"), "left_anti")
     val wantKept = knnSet(Hnsw.buildKnn(vecsKept, "id", "v", 9, 2, 6,
@@ -496,13 +500,70 @@ class PersistenceSpec extends SparkSpec {
     assert(rows(h.parts) ==
       Set(Seq(0, 1L, 5L, 0.9), Seq(0, 3L, 4L, 0.7)))
     assert(h.params("kind") == "hnsw")
-    // a STALE handle refuses nothing but writes to the batch dirs its
-    // manifest knows — appendTo's manifest bump is derived from the
-    // handle, so chaining from `fresh` (same snapshot) still works
+    // `fresh` was opened after the last append, so it is CURRENT (not
+    // stale): appendTo derives the manifest bump from the handle, and
+    // appending through it works like chaining from `h`
     val h2 = AnnIndex.appendTo(fresh,
       Map("vectors" -> Seq((7L, Seq(0.25))).toDF("id", "v")))
     assert(h2.partBatches("vectors") == 3)
     assert(AnnIndex.open(spark, dir).manifest.sortBy(_._1) ==
       h2.manifest.sortBy(_._1))
+  }
+
+  test("AnnIndex.appendTo refuses a STALE handle: after another " +
+    "handle's append or a generation fold it throws before any part " +
+    "write, and the committed batches and manifest stay unchanged") {
+    import graft.ops.AnnIndex
+    import java.nio.file.{Path, Paths}
+    val dir = Files.createTempDirectory("graft-ann-stale").toString +
+      "/idx"
+    AnnIndex.save(dir, Map("rows" -> Seq((1L, "a")).toDF("k", "v")),
+      Map("kind" -> "test"), keys = Map("rows" -> Seq("k")))
+    def delta(k: Long) = Map("rows" -> Seq((k, s"v$k")).toDF("k", "v"))
+    def rows() = AnnIndex.load(spark, dir)._1("rows").select("k")
+      .as[Long].collect().toSet
+    // every file under the root with a digest of its bytes — the
+    // committed b<N> directories and manifest versions included
+    def snapshot(): Map[String, String] = {
+      val root = Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.filter(Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[Path]).map { f =>
+          root.relativize(f).toString ->
+            java.security.MessageDigest.getInstance("MD5")
+              .digest(Files.readAllBytes(f)).map("%02x".format(_)).mkString
+        }.toMap
+      finally walk.close()
+    }
+
+    // two handles on one snapshot; the first appends
+    val first = AnnIndex.open(spark, dir)
+    val second = AnnIndex.open(spark, dir)
+    AnnIndex.appendTo(first, delta(2L))
+    val committed = snapshot()
+    assert(committed.keys.exists(_.startsWith("rows/b1/")))
+    // the second would overwrite the first's rows/b1 — it must throw
+    val err = intercept[IllegalStateException] {
+      AnnIndex.appendTo(second, delta(3L))
+    }
+    assert(err.getMessage.contains("manifest v0") &&
+      err.getMessage.contains("manifest v1"), err.getMessage)
+    assert(snapshot() == committed)
+    assert(rows() == Set(1L, 2L))
+
+    // a handle opened before a generation fold throws after it
+    val beforeFold = AnnIndex.open(spark, dir)
+    AnnIndex.compactToNextGen(spark, dir)
+    val folded = snapshot()
+    val errFold = intercept[IllegalStateException] {
+      AnnIndex.appendTo(beforeFold, delta(4L))
+    }
+    assert(errFold.getMessage.contains(s"$dir/gen-1"), errFold.getMessage)
+    assert(snapshot() == folded)
+    assert(rows() == Set(1L, 2L))
+
+    // a freshly opened handle appends normally
+    AnnIndex.appendTo(AnnIndex.open(spark, dir), delta(4L))
+    assert(rows() == Set(1L, 2L, 4L))
   }
 }

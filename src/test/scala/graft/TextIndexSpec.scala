@@ -270,31 +270,63 @@ class TextIndexSpec extends SparkSpec {
     assert(stray.getMessage.contains("not in the delete set"))
   }
 
-  test("bm25MaintenanceStream CDC UPDATE on a LEGACY store (no " +
-    "pending part) without compaction enabled fails loudly instead " +
-    "of silently degrading to a delete") {
+  test("one store layout: applyCdc, append, search and compact refuse " +
+    "a BM25 store without a pending part with one loud message; the " +
+    "ANN maintenance loop refuses a store without members") {
     implicit val sqlCtx = spark.sqlContext
-    val path = dir("cdc-noupd")
-    // a pre-pending-layout store: the four original parts only
-    val legacyDocs = corpus.take(3).toDF("doc_id", "text")
+    val path = dir("no-pending")
+    val docs = corpus.take(3).toDF("doc_id", "text")
     AnnIndex.save(path,
-      TextIndex.deltaParts(legacyDocs, "doc_id", "text") +
-        ("deleted" -> legacyDocs.select(col("doc_id")).limit(0)),
+      TextIndex.deltaParts(docs, "doc_id", "text") +
+        ("deleted" -> docs.select(col("doc_id")).limit(0)),
       Map("kind" -> "bm25", "id_col" -> "doc_id", "text_col" -> "text"))
-    val input = MemoryStream[(Long, String, String)]
-    val df = input.toDF().toDF("doc_id", "text", "op")
-    val q = StreamOps.bm25MaintenanceStream(df, "doc_id", "text", path,
-      compactEvery = 0, opCol = "op").start()
+    def refusal(op: String)(f: => Any): String = {
+      val m = intercept[IllegalArgumentException](f).getMessage
+      assert(m.startsWith(s"requirement failed: TextIndex.$op: "), m)
+      m.stripPrefix(s"requirement failed: TextIndex.$op: ")
+    }
+    val fresh = Seq((9L, "new text")).toDF("doc_id", "text")
+    val msgs = Seq(
+      refusal("applyCdc")(TextIndex.applyCdc(spark, path,
+        Seq(2L).toDF("doc_id"), fresh.limit(0), fresh, "doc_id",
+        "text")),
+      refusal("append")(TextIndex.append(spark, path, fresh, "doc_id",
+        "text")),
+      refusal("search")(TextIndex.search(spark, path, "fox", 3)),
+      refusal("compact")(TextIndex.compact(spark, path, path + "_c")))
+    assert(msgs.distinct.size == 1, msgs)
+    assert(msgs.head.contains("is not a bm25 store with a pending part") &&
+      msgs.head.contains("TextIndex.save"), msgs.head)
+    // nothing was written: the store is still its one seed batch
+    assert(AnnIndex.maxBatches(spark, path) == 1)
+
+    // ANN: a knn + vectors store (no membership parts) fails the loop
+    val annPath = dir("no-members")
+    val vecs = (0 until 16).map(i =>
+      (i.toLong, Array.tabulate(4)(j => math.sin(i * 3.1 + j))))
+    val vecsDf = vecs.toDF("id", "v")
+    val bf = graft.ops.Hnsw.defaultBucketFn(nPlanes = 2, dim = 4, seed = 9)
+    AnnIndex.save(annPath,
+      Map("knn" -> graft.ops.Hnsw.buildKnn(vecsDf, "id", "v", 9, 1, 3, 1,
+          bf), "vectors" -> vecsDf),
+      Map("kind" -> "hnsw"),
+      keys = Map("knn" -> Seq("lvl", "src"), "vectors" -> Seq("id")))
+    val input = MemoryStream[(Long, Array[Double])]
+    val q = StreamOps.annIndexMaintenanceStream(
+      input.toDF().toDF("id", "v"), "id", "v", annPath, 9, 1, 3, 1, bf)
+      .start()
     try {
-      input.addData(Seq((2L, null.asInstanceOf[String], "delete"),
-        (2L, "new text", "insert")))
+      input.addData((16 until 20).map(i =>
+        (i.toLong, Array.tabulate(4)(j => math.sin(i * 3.1 + j)))))
       val err = intercept[Exception] { q.processAllAvailable() }
       def messages(t: Throwable): Seq[String] =
         if (t == null) Seq.empty
         else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(err).exists(_.contains("compactEvery")),
-        s"wanted the loud CDC-update refusal, got: $err")
+      assert(messages(err).exists(m =>
+          m.contains("members") && m.contains("Hnsw.saveIndex")),
+        s"wanted the loud layout refusal, got: $err")
     } finally q.stop()
+    assert(AnnIndex.maxBatches(spark, annPath) == 1)
   }
 
   test("bm25MaintenanceStream CDC UPDATE BURST: N colliding batches " +

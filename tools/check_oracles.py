@@ -111,3 +111,4 @@ for d in sorted(glob.glob(f'{outdir}/q*')):
         if n == 0:
             fails.append(name)
 print('oracles:', len(oracles), 'fails:', fails or 'NONE')
+sys.exit(1 if fails else 0)
